@@ -1,17 +1,39 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
-/** Generates PLANS.md: formatted physical plans of headline queries with
-  * the scale-relevant features to look for. Run manually when plans change:
-  * `sbt "runMain graft.PlanDump"`. */
+import org.apache.spark.sql.execution.FormattedMode
+import graft.plans.GraftSession
+/** Formatted physical plans of registry queries, in two forms:
+  *  - no arguments: regenerates PLANS.md in the working directory, the
+  *    headline queries at sf0.001 with the scale-relevant features to look
+  *    for. Run when plans change: `sbt "runMain graft.PlanDump"`.
+  *  - `<tag> <suffix> <q1,q2,...> [sfDir]`: writes
+  *    `plans/<tag>/<query>_<suffix>.txt`, the before/after evidence for an
+  *    optimization change (sfDir defaults to SPARK_GRAFT_SF_DIR, else
+  *    sf0.001), e.g. `sbt "runMain graft.PlanDump r18 after llm_dup_clusters"`. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cores = GraftSession.envCores
+    val spark = GraftSession.builder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
+    def plan(name: String, sfDir: String): String =
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+    if (args.isEmpty) writePlansMd(cores, plan(_, dir))
+    else {
+      val Array(tag, suffix, names) = args.take(3)
+      val sfDir = args.lift(3).getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", dir))
+      val out = Paths.get(s"plans/$tag")
+      Files.createDirectories(out)
+      names.split(',').map(_.trim).filter(_.nonEmpty).foreach { name =>
+        Files.writeString(out.resolve(s"${name}_$suffix.txt"),
+          s"== $name ($suffix, $sfDir) ==\n${plan(name, sfDir)}")
+        println(s"wrote plans/$tag/${name}_$suffix.txt")
+      }
+    }
+    spark.stop()
+  }
+
+  private def writePlansMd(cores: Int, plan: String => String): Unit = {
     val picks = Seq(
       ("q1_pricing_summary", "one scan, partial-agg before the single shuffle; pruned ReadSchema + pushed date filter"),
       ("j1_broadcast_join", "BroadcastHashJoin: the AP-dimension lookup shape - fact side never shuffles"),
@@ -66,21 +88,18 @@ object PlanDump {
       ("j16_polygon_join", "points x polygon-table spatial join (round 12): polygons explode to their bbox's covering grid cells, points hash to ONE cell, the match is an equi-join on (cx, cy) with the exact translated ray cast as residual - no BroadcastNestedLoopJoin at any polygon count"),
       ("o37_sliding_distinct", "exact trailing-window distinct count (round 12): per-(key,user) island windows share one exchange, boundary deltas and probe days union into ONE per-key prefix-sum window - no per-window distinct set, no day x user expansion"))
     val sb = new StringBuilder
-    sb.append("# PLANS — headline physical plans (sf0.001, local[4])\n\n")
+    sb.append(s"# PLANS — headline physical plans (sf0.001, local[$cores])\n\n")
     sb.append("Generated by `graft.PlanDump`; regenerate after plan-affecting changes.\n")
     sb.append("What to look for is noted per query; `PlanAuditSpec` asserts the same\n")
     sb.append("properties on every build.\n")
     picks.foreach { case (name, note) =>
-      val df = SparkEntry.queries(name)(spark, dir)
       sb.append(s"\n## $name\n\n_${note}_\n\n```\n")
-      val full = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val full = plan(name)
       if (full.length <= 12000) sb.append(full)
       else sb.append(full.take(12000)).append("\n… (truncated at 12000 chars)")
       sb.append("\n```\n")
     }
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("WROTE PLANS.md")
-    spark.stop()
   }
 }

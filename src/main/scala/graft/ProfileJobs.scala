@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import graft.plans.GraftSession
 
 /** Per-JOB time accounting for one registered query — the guide-§1 "where
   * does the wall clock go" probe the SQL tab would give if the UI were on.
@@ -15,13 +15,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     final case class Job(id: Int, t0: Long, var t1: Long = -1L,

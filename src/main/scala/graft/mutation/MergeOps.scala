@@ -97,74 +97,6 @@ object MergeOps {
     spark.read.parquet(path)
   }
 
-  /** A6 — UPDATE keyed on event_id: rows in `updates` replace table rows
-    * with the same key; unmatched update rows are ignored (pure UPDATE) or
-    * appended (`insertUnmatched = true` → full MERGE/upsert).
-    *
-    * `fenceId` is the streaming-sink idempotence fence (the Delta
-    * txnVersion idiom): when set, the merge is SKIPPED (returns false) if
-    * the table already carries a fence ≥ the given id, and otherwise the
-    * new fence is written INSIDE the staged directory — it rides the same
-    * atomic rename as the data, so there is no crash window where the
-    * merge landed but the fence did not. An at-least-once `foreachBatch`
-    * replay therefore re-runs the merge only if the original never
-    * committed. Returns true iff the merge was applied. */
-  def mergeByKey(
-      spark: SparkSession,
-      path: String,
-      updates: DataFrame,
-      key: String,
-      insertUnmatched: Boolean = false,
-      fenceId: Option[Long] = None): Boolean = {
-    // Recover BEFORE the fence check: after a crash between the swap's two
-    // renames the table — fence included — lives only at the hidden
-    // backup, and a fence read against the missing target would say
-    // "never committed" and re-apply.
-    recoverIfNeeded(spark, path)
-    if (fenceId.exists(id => readFence(spark, path).exists(_ >= id)))
-      return false
-    // No broadcast hints: the update key set is bounded for point mutations
-    // but dimension-scale for state write-backs (one key per AP) — AQE picks
-    // broadcast when the side is actually small and shuffles when it isn't.
-    val target = readTable(spark, path)
-    val keys = updates.select(col(key)).distinct()
-    val untouched = target.join(keys, Seq(key), "left_anti")
-    val matched =
-      if (insertUnmatched) updates
-      else updates.join(target.select(col(key)).distinct(), Seq(key), "left_semi")
-    val merged = untouched.unionByName(matched.select(target.columns.map(col): _*))
-    swapDir(spark, path) { tmp =>
-      merged.write.mode(SaveMode.Overwrite).parquet(tmp)
-      fenceId.foreach(writeFence(spark, tmp, _))
-    }
-    true
-  }
-
-  /** The fence sentinel is an underscore-prefixed sibling of the parquet
-    * files (`_fence`): Spark's file index skips `_`-prefixed names, so it
-    * never reads as data, and living INSIDE the table directory it moves
-    * through every swap/backup/recovery rename atomically with the rows. */
-  def readFence(spark: SparkSession, path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path, "_fence")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val s = new java.io.BufferedReader(
-          new java.io.InputStreamReader(in, "UTF-8")).readLine()
-        Option(s).map(_.trim.toLong)
-      } finally in.close()
-    }
-  }
-
-  private def writeFence(spark: SparkSession, dir: String, id: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_fence")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = f.create(p, true)
-    try out.write(s"$id\n".getBytes("UTF-8")) finally out.close()
-  }
-
   /** Left-join `hits` (event_id, distance) onto `target` and set the
     * global-outlier columns on the matched rows
     * (`wifi_measurement_s3_table_schema.md:111-126`). No broadcast hint:

@@ -5,14 +5,19 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionIn
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-/** SparkSessionExtensions entry point: registers the engine's native SQL
-  * functions so plain `spark.sql(...)` text can use them
-  * (`--conf spark.sql.extensions=graft.plans.GraftExtensions`, or
-  * `.withExtensions(new GraftExtensions)` on a builder — see
-  * `GraftSession`).
+/** SparkSessionExtensions entry point: injects the engine's native SQL
+  * functions and optimizer rules when a session is constructed — through
+  * [[GraftSession.builder]], or `--conf
+  * spark.sql.extensions=graft.plans.GraftExtensions` on spark-submit. There
+  * is no post-construction path: `getOrCreate` on an existing session
+  * ignores extensions, so every session must be built with them, and then
+  * every query sees the same rule set. A rule can be switched off per
+  * session with `spark.sql.optimizer.excludedRules`.
   *
   * Registered surface:
-  *  - `haversine_m(lat1, lon1, lat2, lon2)` — codegen'd great-circle meters.
+  *  - functions `haversine_m`, `cosine_sim`, `double_order_bits`,
+  *    `double_order_bits_inv`, `l2_sq`, `jaro_winkler`;
+  *  - optimizer rules [[OutlierIdiomRule]], [[CircleFilterRule]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -35,7 +40,7 @@ object GraftExtensions {
     HaversineExpression(a1, o1, a2, o2)
   }
 
-  val haversineFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+  private val haversineFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("haversine_m"),
     new ExpressionInfo(classOf[HaversineExpression].getName, "haversine_m"),
     haversineBuilder)
@@ -50,7 +55,7 @@ object GraftExtensions {
     CosineExpression(a, b)
   }
 
-  val cosineFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+  private val cosineFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("cosine_sim"),
     new ExpressionInfo(classOf[CosineExpression].getName, "cosine_sim"),
     cosineBuilder)
@@ -61,7 +66,7 @@ object GraftExtensions {
     DoubleOrderBitsExpression(Cast(children.head, DoubleType))
   }
 
-  val orderBitsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+  private val orderBitsFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("double_order_bits"),
     new ExpressionInfo(classOf[DoubleOrderBitsExpression].getName, "double_order_bits"),
     orderBitsBuilder)
@@ -73,7 +78,7 @@ object GraftExtensions {
       Cast(children.head, org.apache.spark.sql.types.LongType))
   }
 
-  val orderBitsInvFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+  private val orderBitsInvFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("double_order_bits_inv"),
     new ExpressionInfo(classOf[DoubleOrderBitsInverseExpression].getName,
       "double_order_bits_inv"),
@@ -87,7 +92,7 @@ object GraftExtensions {
     L2SqExpression(a, b)
   }
 
-  val l2SqFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+  private val l2SqFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("l2_sq"),
     new ExpressionInfo(classOf[L2SqExpression].getName, "l2_sq"),
     l2SqBuilder)
@@ -100,38 +105,8 @@ object GraftExtensions {
     JaroWinklerExpression(a, b)
   }
 
-  val jaroWinklerFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+  private val jaroWinklerFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("jaro_winkler"),
     new ExpressionInfo(classOf[JaroWinklerExpression].getName, "jaro_winkler"),
     jaroWinklerBuilder)
-
-  /** Register on an EXISTING session (getOrCreate ignores extensions when a
-    * session already exists — e.g. shared test fixtures, spark-shell).
-    * Functions go to the registry; optimizer rules ride the experimental
-    * hook (the only post-construction injection point Spark exposes). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Seq(haversineFunction, cosineFunction, orderBitsFunction,
-      orderBitsInvFunction, l2SqFunction, jaroWinklerFunction).foreach { f =>
-      spark.sessionState.functionRegistry.registerFunction(f._1, f._2, f._3)
-    }
-    Seq(OutlierIdiomRule, CircleFilterRule).foreach { r =>
-      if (!spark.experimental.extraOptimizations.contains(r))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ r
-    }
-  }
-}
-
-/** Session factory with the engine's recommended local-mode configuration:
-  * extensions registered, AQE on (runtime re-planning + skew-join handling),
-  * shuffle partitions sized to the core count rather than the 200 default. */
-object GraftSession {
-  def builder(cores: Int): org.apache.spark.sql.SparkSession.Builder =
-    org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cores]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
 }

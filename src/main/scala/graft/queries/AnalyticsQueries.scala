@@ -1303,7 +1303,6 @@ object AnalyticsQueries {
       |         POW(SIN(RADIANS((s_suppkey % 160) - 0.0) / 2), 2))))) AS BIGINT)
       |         AS max_m
       |FROM supplier GROUP BY s_nationkey ORDER BY nationkey""".stripMargin) { (s, dir) =>
-    graft.plans.GraftExtensions.register(s)
     Tables.supplier(s, dir).createOrReplaceTempView("graft_supplier_v")
     s.sql(
       """SELECT s_nationkey AS nationkey, COUNT(*) AS n,
@@ -1887,7 +1886,6 @@ object AnalyticsQueries {
           expr("(((user_id % 180) - 90) + (event_id % 23) * CAST(0.0003 AS DOUBLE))")
             .as("longitude"))
         .write.parquet(work + "/pts")
-      graft.plans.GraftExtensions.register(s)
       s.read.parquet(work + "/pts").createOrReplaceTempView("graft_circle_pts")
       val out = s.sql(
         """SELECT COUNT(*) AS cnt,

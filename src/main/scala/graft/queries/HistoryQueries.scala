@@ -381,8 +381,9 @@ object HistoryQueries {
   /** The pure SCD2 fold: the changed keys' stored chains (`existing`)
     * refolded with the batch's events into their complete new chains —
     * O(changed keys) rows out, one keyed window pass. Shared by
-    * [[applyScd2Batch]] and the COW-vs-MOR profile harness
-    * ([[graft.ProfileScd2]]), so both arms measure the identical fold. */
+    * [[applyScd2Batch]] and the COW-vs-MOR profile harness (ProfileScd2,
+    * removed; last in tree at 26c49d5), so both arms measured the
+    * identical fold. */
   private[graft] def scd2Fold(
       existing: DataFrame, batch: DataFrame): DataFrame = {
     val changedKeys = batch.select("custkey").distinct()

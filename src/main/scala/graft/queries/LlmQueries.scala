@@ -674,9 +674,10 @@ object LlmQueries {
     // pre-flight discipline): an unhinted plan shuffles the full 3.7M-
     // gram exchange before AQE can see the rare side is 8.6k rows — the
     // exchange stages launch in parallel (measured 8.7 s vs 0.2 s at the
-    // extent decade, ProfileContainment). Past the probe bound (a
-    // dup-heavy corpus where rare grams are themselves corpus-scaled)
-    // the plan falls back to the gram-keyed shuffle join.
+    // extent decade, ProfileContainment; removed, last in tree at 26c49d5).
+    // Past the probe bound (a dup-heavy corpus where rare grams are
+    // themselves corpus-scaled) the plan falls back to the gram-keyed
+    // shuffle join.
     val fx =
       if (rare.count() <= 1000000L)
         ex.join(broadcast(rare.limit(1000000)), "gram")
@@ -694,8 +695,9 @@ object LlmQueries {
     // prunes the corpus scan MAP-SIDE — without this the two verify
     // joins shuffle every document's gram array against a pair list
     // orders of magnitude smaller (measured 6.3 s -> 0.5 s at the extent
-    // decade, ProfileContainment). At warehouse scale the id set is
-    // chunked if dup density pushes it past broadcast size.
+    // decade, ProfileContainment; removed, last in tree at 26c49d5). At
+    // warehouse scale the id set is chunked if dup density pushes it past
+    // broadcast size.
     val candk = cand.localCheckpoint(false)
     val ids = candk.select(col("id_a").as("doc_id"))
       .unionByName(candk.select(col("id_b").as("doc_id"))).distinct()
@@ -843,8 +845,9 @@ object LlmQueries {
     // prunes the corpus scan MAP-SIDE — without this the two verify
     // joins shuffle every document's gram array against a pair list
     // orders of magnitude smaller (measured 6.3 s -> 0.5 s at the extent
-    // decade, ProfileContainment). At warehouse scale the id set is
-    // chunked if dup density pushes it past broadcast size.
+    // decade, ProfileContainment; removed, last in tree at 26c49d5). At
+    // warehouse scale the id set is chunked if dup density pushes it past
+    // broadcast size.
     val candk = cand.localCheckpoint(false)
     val ids = candk.select(col("id_a").as("doc_id"))
       .unionByName(candk.select(col("id_b").as("doc_id"))).distinct()
@@ -1035,8 +1038,9 @@ object LlmQueries {
     // prunes the corpus scan MAP-SIDE — without this the two verify
     // joins shuffle every document's gram array against a pair list
     // orders of magnitude smaller (measured 6.3 s -> 0.5 s at the extent
-    // decade, ProfileContainment). At warehouse scale the id set is
-    // chunked if dup density pushes it past broadcast size.
+    // decade, ProfileContainment; removed, last in tree at 26c49d5). At
+    // warehouse scale the id set is chunked if dup density pushes it past
+    // broadcast size.
     val candk = cand.localCheckpoint(false)
     val ids = candk.select(col("id_a").as("doc_id"))
       .unionByName(candk.select(col("id_b").as("doc_id"))).distinct()

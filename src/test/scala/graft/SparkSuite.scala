@@ -15,11 +15,7 @@ trait SparkSuite extends BeforeAndAfterAll { self: Suite =>
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val session: SparkSession = graft.plans.GraftSession.builder(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

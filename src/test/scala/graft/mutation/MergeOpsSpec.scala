@@ -20,54 +20,6 @@ class MergeOpsSpec extends AnyFunSuite with Matchers with SparkSuite {
     dir
   }
 
-  test("mergeByKey fence: committed batches skip, and the fence survives a crashed swap") {
-    import spark.implicits._
-    val path = freshTable()
-    val upd = Seq(("e3", "bssidX", 99.0, Option.empty[Boolean]))
-      .toDF("event_id", "bssid", "value", "is_global_outlier")
-    MergeOps.mergeByKey(spark, path, upd, "event_id",
-      fenceId = Some(7L)) shouldBe true
-    MergeOps.readFence(spark, path) shouldBe Some(7L)
-    // replay of the committed batch: skipped whole
-    MergeOps.mergeByKey(spark, path, upd, "event_id",
-      fenceId = Some(7L)) shouldBe false
-    // crash state: the table (fence included) lives only at the hidden
-    // backup — the fence check must see the RECOVERED table, not conclude
-    // "never committed" from the missing target
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(
-        MergeOps.swapArtifact(path, ".tmp_old"))) shouldBe true
-    MergeOps.mergeByKey(spark, path, upd, "event_id",
-      fenceId = Some(7L)) shouldBe false // recovered AND fenced out
-    spark.read.parquet(path).where("event_id = 'e3'")
-      .head().getDouble(2) shouldBe 99.0
-    // a newer batch still applies and advances the fence
-    MergeOps.mergeByKey(spark, path,
-      Seq(("e4", "bssidY", 55.0, Option.empty[Boolean]))
-        .toDF("event_id", "bssid", "value", "is_global_outlier"),
-      "event_id", fenceId = Some(8L)) shouldBe true
-    MergeOps.readFence(spark, path) shouldBe Some(8L)
-  }
-
-  test("mergeByKey: matched rows replaced; unmatched updates ignored or upserted") {
-    import spark.implicits._
-    val path = freshTable()
-    val updates = Seq(
-      ("e3", "bssidX", 99.0, Option.empty[Boolean]),
-      ("e99", "new", 1.0, Option.empty[Boolean]))
-      .toDF("event_id", "bssid", "value", "is_global_outlier")
-
-    MergeOps.mergeByKey(spark, path, updates, "event_id")
-    val afterUpdate = spark.read.parquet(path)
-    afterUpdate.count() shouldBe 10 // pure UPDATE: e99 not inserted
-    afterUpdate.where("event_id = 'e3'").head.getAs[Double]("value") shouldBe 99.0
-
-    MergeOps.mergeByKey(spark, path, updates, "event_id", insertUnmatched = true)
-    spark.read.parquet(path).count() shouldBe 11 // upsert adds e99
-  }
-
   test("labelOutliers sets the global_* columns only for the hit keys") {
     import spark.implicits._
     val path = freshTable()

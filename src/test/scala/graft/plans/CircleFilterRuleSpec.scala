@@ -28,7 +28,6 @@ class CircleFilterRuleSpec extends AnyFunSuite with Matchers with SparkSuite {
   }
 
   test("bounding box reaches PushedFilters and results are unchanged") {
-    GraftExtensions.register(spark)
     withPoints { path =>
       spark.read.parquet(path).createOrReplaceTempView("circle_spec_pts")
       val sql =
@@ -41,22 +40,27 @@ class CircleFilterRuleSpec extends AnyFunSuite with Matchers with SparkSuite {
       // (the PushedFilters list itself truncates in toString, so assert
       // the leading pushed entries plus all four bounds in the Filter)
       plan should include regex "PushedFilters: \\[\\w+\\(longitude"
-      plan should include regex "latitude#\\d+ >= "
-      plan should include regex "latitude#\\d+ <= "
-      plan should include regex "longitude#\\d+ >= "
-      plan should include regex "longitude#\\d+ <= "
+      val bounds = Seq("latitude#\\d+ >= ", "latitude#\\d+ <= ",
+        "longitude#\\d+ >= ", "longitude#\\d+ <= ")
+      bounds.foreach(b => plan should include regex b)
       // the exact predicate stays as the residual
       plan should include("haversine_m")
 
-      // identity: same rows as the un-rewritten plan (rule removed)
-      val saved = spark.experimental.extraOptimizations
-      spark.experimental.extraOptimizations =
-        saved.filterNot(_ == CircleFilterRule)
+      // identity: same rows as the un-rewritten plan (rule excluded)
+      val key = "spark.sql.optimizer.excludedRules"
+      val saved = spark.conf.getOption(key)
+      spark.conf.set(key, CircleFilterRule.ruleName)
       try {
-        val without = spark.sql(sql).collect().toSet
+        val unrewritten = spark.sql(sql)
+        val opt = unrewritten.queryExecution.optimizedPlan.toString
+        bounds.foreach(b => b.r.findFirstIn(opt) shouldBe empty)
+        val without = unrewritten.collect().toSet
         withRule.collect().toSet shouldBe without
         without.size should be > 0
-      } finally spark.experimental.extraOptimizations = saved
+      } finally saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
     }
   }
 
@@ -96,7 +100,6 @@ class CircleFilterRuleSpec extends AnyFunSuite with Matchers with SparkSuite {
   }
 
   test("rule is idempotent: second optimizer pass adds no new conjuncts") {
-    GraftExtensions.register(spark)
     withPoints { path =>
       spark.read.parquet(path).createOrReplaceTempView("circle_spec_pts2")
       val df = spark.sql(

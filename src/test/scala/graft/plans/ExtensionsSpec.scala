@@ -10,11 +10,6 @@ import graft.functions.Geo
   * into whole-stage codegen, numerically identical to the Column form. */
 class ExtensionsSpec extends AnyFunSuite with Matchers with graft.SparkSuite {
 
-  // getOrCreate returns the suite-shared session (built without extensions),
-  // so exercise the post-hoc registration path — the same code the
-  // build-time injection uses.
-  GraftExtensions.register(spark)
-
   test("haversine_m callable from SQL text and matches the Column expression") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -141,9 +136,8 @@ class ExtensionsSpec extends AnyFunSuite with Matchers with graft.SparkSuite {
     val df = Seq(
       ("keep_false", Some(false)), ("keep_null", None), ("drop_true", Some(true)))
       .toDF("name", "flag")
-    // Apply the rule directly to the analyzed plan (the shared test session
-    // predates the extensions; build-time injection is covered by
-    // GraftExtensions wiring + this semantic check).
+    // Apply the rule directly to the analyzed plan, so the check pins this
+    // rule's rewrite rather than the whole optimizer's output.
     val idiom = df.where("flag != true OR flag IS NULL")
     val rewritten = OutlierIdiomRule(idiom.queryExecution.analyzed)
     // canonical pushdown-friendly form: NOT x OR isnull(x), no coalesce

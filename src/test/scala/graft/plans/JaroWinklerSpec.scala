@@ -46,7 +46,6 @@ class JaroWinklerSpec extends AnyFunSuite with Matchers with SparkSuite {
 
   test("SQL registration and codegen path agree with direct compute") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     val df = Seq(("martha", "marhta"), ("dixon", "dicksonx"), ("", ""))
       .toDF("a", "b")
     df.createOrReplaceTempView("jw_pairs")

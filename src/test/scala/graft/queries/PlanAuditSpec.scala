@@ -166,7 +166,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSuite {
     // A mutation's update/hit set is a FRACTION OF THE TABLE, not a
     // dimension — a broadcast hint there is the driver-OOM pattern at
     // 100 TB. Audit the label plan directly, and pin the rule for every
-    // MergeOps path at the source level (the joins inside mergeByKey /
+    // MergeOps path at the source level (the joins inside mergeByKeyPartitioned /
     // deleteWhere are built and consumed inside the write call, so their
     // plans aren't reachable from a test).
     import spark.implicits._
