@@ -3,6 +3,7 @@ package graft.mutation
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, pmod, struct, xxhash64, max => fmax, min => fmin}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Log-structured versioned table — the transaction-log core of
   * Delta/Iceberg reproduced on plain parquet, upgrading the in-place
@@ -567,10 +568,7 @@ object VersionedTable {
     try {
       val f = p.getFileSystem(conf)
       if (!f.exists(p)) return None
-      val files = f.listStatus(p).map(_.getPath).filter { q =>
-        val n = q.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
+      val files = f.listStatus(p).map(_.getPath).filter(isDataFile)
       if (files.isEmpty) return None
       val wanted = statCols.toSet
       // (isString, numMin, numMax, strMin, strMax, seen) per column
@@ -671,6 +669,13 @@ object VersionedTable {
     }
   }
 
+  /** A parquet data file of a segment directory — not a `_SUCCESS`
+    * marker, a `.crc` sidecar or a hidden staging file. */
+  private def isDataFile(q: Path): Boolean = {
+    val n = q.getName
+    n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+  }
+
   /** a < b in unsigned UTF-8 byte order — the ordering parquet footer
     * statistics and Spark's UTF8String use; Java String compareTo
     * (UTF-16 code units) disagrees with it beyond the BMP's ASCII range. */
@@ -690,7 +695,7 @@ object VersionedTable {
   private[mutation] def scanStats(
       spark: SparkSession, path: String, statCols: Seq[String])
       : (Map[String, (Double, Double)], Map[String, (String, String)]) = {
-    val written = spark.read.parquet(path)
+    val written = readSegments(spark, Seq(path), mergeSchema = false)
     val strCols = statCols.filter(c =>
       written.schema.find(_.name == c)
         .exists(_.dataType == org.apache.spark.sql.types.StringType))
@@ -1178,9 +1183,11 @@ object VersionedTable {
     * seq only, so rows re-inserted after the delete stay visible.
     * `victims` sees the current deletes-applied table (optionally
     * stats-pruned to `prune`'s interval so the victim scan skips
-    * disjoint segments). Null-keyed rows are dropped (they can never
-    * equality-match). Returns (new version, keys deleted); no commit
-    * when nothing matches. */
+    * disjoint segments) and is evaluated ONCE, by the segment write; the
+    * key count comes from the written footers ([[commitDelete]]).
+    * Null-keyed rows are dropped (they can never equality-match).
+    * Returns (new version, keys deleted); no commit when nothing
+    * matches. */
   def morDelete(
       spark: SparkSession, root: String, keyCols: Seq[String],
       victims: DataFrame => DataFrame,
@@ -1194,11 +1201,27 @@ object VersionedTable {
     }
     val keysDf = victims(visible)
       .select(keyCols.map(col): _*).na.drop("any").distinct()
-    val n = keysDf.count()
-    if (n == 0L) return (snap.version, 0L)
-    val del = writeSegment(spark, root, keysDf,
-      statCols = keyCols, prefix = "del_", keys = keyCols)
-    (commitSnap(spark, root, Some(snap), snap.segments :+ del, None, None), n)
+    commitDelete(spark, root, snap, writeSegment(spark, root, keysDf,
+      statCols = keyCols, prefix = "del_", keys = keyCols))
+  }
+
+  /** Commit a freshly written delete segment, or — when it holds no rows —
+    * remove it and keep the current version (the staged-then-discard
+    * pattern [[writeDeleteSegment]] uses for null keys). The row count
+    * comes from the written footers ([[rowCount]]), so the victims are
+    * evaluated once, by the write itself; counting them first would
+    * re-read the table and re-run the victim join. Returns (version,
+    * rows in the segment). */
+  private def commitDelete(
+      spark: SparkSession, root: String, snap: Snapshot,
+      seg: Segment): (Long, Long) = {
+    val path = new Path(root, seg.name).toString
+    val n = rowCount(spark, path)
+    if (n == 0L) {
+      fs(spark, root).delete(new Path(path), true)
+      (snap.version, 0L)
+    } else
+      (commitSnap(spark, root, Some(snap), snap.segments :+ seg, None, None), n)
   }
 
   /** Merge-on-read UPSERT (MERGE WHEN MATCHED UPDATE / NOT MATCHED
@@ -1270,7 +1293,7 @@ object VersionedTable {
     val segPath = new Path(root, seg.name).toString
     val hasNull = footerNullCounts(spark, segPath, keyCols) match {
       case Some(m) => keyCols.exists(c => m.getOrElse(c, 0L) > 0L)
-      case None => !spark.read.parquet(segPath)
+      case None => !readSegments(spark, Seq(segPath), mergeSchema = false)
         .where(keyCols.map(col(_).isNull).reduce(_ || _)).isEmpty
     }
     if (hasNull) {
@@ -1293,10 +1316,7 @@ object VersionedTable {
     val p = new Path(path)
     try {
       val f = p.getFileSystem(conf)
-      val files = f.listStatus(p).map(_.getPath).filter { q =>
-        val n = q.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
+      val files = f.listStatus(p).map(_.getPath).filter(isDataFile)
       val wanted = cols.toSet
       val acc = scala.collection.mutable.Map.empty[String, Long]
         .withDefaultValue(0L)
@@ -1318,6 +1338,82 @@ object VersionedTable {
       if (ok) Some(acc.toMap) else None
     } catch { case scala.util.control.NonFatal(_) => None }
   }
+
+  /** Total row count of a written parquet directory: from its footers —
+    * driver-side metadata only, zero Spark jobs (the footerStats
+    * discipline) — or, when any footer cannot be read, one counting
+    * scan of the directory. */
+  private def rowCount(spark: SparkSession, path: String): Long = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fromFooters =
+      try {
+        val p = new Path(path)
+        val entries = p.getFileSystem(conf).listStatus(p)
+        val parquetFiles = entries.map(_.getPath).filter(isDataFile)
+        // A non-empty directory with NO directly-nested parquet files (e.g.
+        // a future nested layout) is "unknown" (→ the counting scan), never
+        // 0 — a bloom sized at 0 items is saturated and always-positive, a
+        // silent perf degradation, and a delete counted 0 is discarded.
+        if (parquetFiles.isEmpty && entries.nonEmpty) None
+        else {
+          var total = 0L
+          parquetFiles.foreach { fp =>
+            val rd = ParquetFileReader.open(HadoopInputFile.fromPath(fp, conf))
+            try rd.getFooter.getBlocks.forEach(b => total += b.getRowCount)
+            finally rd.close()
+          }
+          Some(total)
+        }
+      } catch { case scala.util.control.NonFatal(_) => None }
+    fromFooters.getOrElse(
+      readSegments(spark, Seq(path), mergeSchema = false).count())
+  }
+
+  /** The Spark schema a segment's first footer carries — the
+    * `org.apache.spark.sql.parquet.row.metadata` entry Spark writes into
+    * every file — read on the driver, zero Spark jobs. None when the
+    * segment has no directly-nested parquet file, the footer lacks the
+    * entry (a file from another writer), or anything fails to read or
+    * parse; the caller then lets Spark infer. */
+  private def footerSchema(
+      spark: SparkSession, path: String): Option[StructType] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    try {
+      val p = new Path(path)
+      val first = p.getFileSystem(conf).listStatus(p).map(_.getPath)
+        .filter(isDataFile).minByOption(_.getName)
+      first.flatMap { fp =>
+        val rd = ParquetFileReader.open(HadoopInputFile.fromPath(fp, conf))
+        val kv = try rd.getFooter.getFileMetaData.getKeyValueMetaData
+          finally rd.close()
+        Option(kv.get("org.apache.spark.sql.parquet.row.metadata"))
+      }.map(DataType.fromJson).collect { case st: StructType => st }
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** The one reader of segment files: every scan of a segment group goes
+    * through here. A parquet read without a schema launches a one-task
+    * schema-inference job per call — one per segment group per table
+    * read, a count that grows with every commit — although the schema it
+    * infers is the one Spark wrote into the footer. This takes that
+    * schema from the first segment's first footer on the driver
+    * ([[footerSchema]]) and hands it to the reader, so building the frame
+    * launches no job; the result has the same schema and rows. A footer
+    * without the entry, and a `mergeSchema` read (which must see every
+    * footer), infer exactly as Spark does. */
+  private def readSegments(
+      spark: SparkSession, paths: Seq[String],
+      mergeSchema: Boolean): DataFrame =
+    if (mergeSchema)
+      spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    else footerSchema(spark, paths.head) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None         => spark.read.parquet(paths: _*)
+    }
 
   /** Replay-safe streaming MOR upsert: [[morUpsert]] fenced per writer
     * lineage exactly like [[appendFenced]] — the CDC-apply sink. The
@@ -1369,7 +1465,8 @@ object VersionedTable {
     * rule. Scan-side cost is one broadcast anti-join on (file, pos) only
     * while deletion vectors exist; [[morMaterialize]] retires them.
     * `cond` evaluates against the deletes-applied snapshot, so an
-    * already-deleted row is never recorded twice. Returns (new version,
+    * already-deleted row is never recorded twice, and is evaluated once,
+    * by the segment write ([[commitDelete]]). Returns (new version,
     * positions deleted); no commit when nothing matches. */
   def posDelete(
       spark: SparkSession, root: String,
@@ -1377,12 +1474,8 @@ object VersionedTable {
     val snap = snapOrInit(spark, root)
     val victims = readWithPosSnap(spark, root, snap).where(cond)
       .select(col("__pd_file"), col("__pd_pos")).distinct()
-      .localCheckpoint() // count + segment write share one evaluation
-    val n = victims.count()
-    if (n == 0L) return (snap.version, 0L)
-    val pdel = writeSegment(spark, root, victims, Nil, prefix = "pdel_")
-    (commitSnap(spark, root, Some(snap),
-      snap.segments :+ pdel, None, None), n)
+    commitDelete(spark, root, snap,
+      writeSegment(spark, root, victims, Nil, prefix = "pdel_"))
   }
 
   /** MATERIALIZE deletes (Iceberg's rewrite-with-deletes maintenance):
@@ -1407,8 +1500,8 @@ object VersionedTable {
     // named segment set is one small scan, not a table read
     val pdelSegs: Set[String] =
       if (pdels.isEmpty) Set.empty
-      else spark.read.parquet(
-        pdels.map(s => new Path(root, s.name).toString): _*)
+      else readSegments(spark,
+        pdels.map(s => new Path(root, s.name).toString), mergeSchema = false)
         .select("__pd_file").distinct().collect()
         .map(r => baseName(new Path(r.getString(0)).getParent.toString))
         .toSet
@@ -1516,7 +1609,10 @@ object VersionedTable {
     * anti-joined against the union of exactly its applicable delete
     * files on the recorded key columns, groups unioned back. A table
     * with no deletes short-circuits to the plain multi-path parquet scan
-    * — zero overhead on the common path. Distinct delete-seq values are
+    * — zero overhead on the common path. Every group reads through
+    * [[readSegments]], so building the frame is driver-side metadata
+    * only (manifest plus one footer per group) and launches no Spark job
+    * before an action. Distinct delete-seq values are
     * few (one per MOR commit until materialization), so the plan stays
     * lean; delete files are small, so Spark broadcasts the anti-join's
     * build side. Keys are matched with SQL equality: delete rows never
@@ -1540,7 +1636,8 @@ object VersionedTable {
     // relative to data, so AQE broadcasts the anti-join's build side.
     val posKill: Option[DataFrame] =
       if (pdels.isEmpty) None
-      else Some(spark.read.parquet(pdels.map(s => p(s.name)): _*)
+      else Some(readSegments(spark, pdels.map(s => p(s.name)),
+        mergeSchema = false)
         .select(col("__pd_file"), col("__pd_pos")).distinct())
     // segments sharing a physical schema era (same applicable renames)
     // scan together; eras with old physical names map to current logical
@@ -1549,11 +1646,7 @@ object VersionedTable {
       segs.groupBy(s => renameFor(renames, s.seq)).toSeq
         .sortBy(_._2.map(_.name).min)
         .map { case (rs, group) =>
-          val raw0 =
-            if (mergeSchema)
-              spark.read.option("mergeSchema", "true")
-                .parquet(group.map(s => p(s.name)): _*)
-            else spark.read.parquet(group.map(s => p(s.name)): _*)
+          val raw0 = readSegments(spark, group.map(s => p(s.name)), mergeSchema)
           val raw =
             if (posKill.isEmpty && !keepPos) raw0
             else {
@@ -1611,7 +1704,13 @@ object VersionedTable {
     * older segments read as null) — and because each version resolves
     * only ITS segments, an old snapshot keeps reading with exactly the
     * schema it was written under, the Iceberg snapshot-scoped-schema
-    * behavior. Costs one footer read per file; default off. */
+    * behavior. Costs one footer read per file; default off.
+    *
+    * Building the frame is driver-side metadata only: the manifest, plus
+    * one footer per segment group for its schema ([[readSegments]]). No
+    * Spark job runs until an action, except one schema-inference job per
+    * group headed by a segment without Spark's schema key (an external
+    * file imported by [[importDir]]) and the `mergeSchema` footer merge. */
   def read(
       spark: SparkSession, root: String,
       version: Option[Long] = None,
@@ -1750,8 +1849,9 @@ object VersionedTable {
       Some(added.groupBy(s => renameFor(chain, s.seq)).toSeq
         .sortBy(_._2.map(_.name).min)
         .map { case (rs, group) =>
-          applyRenames(spark.read.parquet(
-            group.map(s => new Path(root, s.name).toString): _*), rs)
+          applyRenames(readSegments(spark,
+            group.map(s => new Path(root, s.name).toString),
+            mergeSchema = false), rs)
         }.reduce(_.unionByName(_)))
     }
   }
@@ -1800,16 +1900,16 @@ object VersionedTable {
       prev = cur.map(_.name).toSet
       val (datas, dels, pdels) = splitSegments(added)
       if (added.isEmpty) None
-      else Some(ChangeSet(
-        v,
-        if (datas.nonEmpty) Some(spark.read.parquet(
-          datas.map(s => new Path(root, s.name).toString): _*)) else None,
-        if (dels.nonEmpty) Some(spark.read.parquet(
-          dels.map(s => new Path(root, s.name).toString): _*)) else None,
-        dels.headOption.map(_.keys).getOrElse(Nil),
-        if (pdels.nonEmpty) Some(spark.read.parquet(
-          pdels.map(s => new Path(root, s.name).toString): _*)
-          .select(col("__pd_file"), col("__pd_pos"))) else None))
+      else {
+        def readAll(segs: Seq[Segment]) =
+          if (segs.isEmpty) None
+          else Some(readSegments(spark,
+            segs.map(s => new Path(root, s.name).toString),
+            mergeSchema = false))
+        Some(ChangeSet(v, readAll(datas), readAll(dels),
+          dels.headOption.map(_.keys).getOrElse(Nil),
+          readAll(pdels).map(_.select(col("__pd_file"), col("__pd_pos")))))
+      }
     }
   }
 
@@ -1885,37 +1985,6 @@ object VersionedTable {
     * degrades to reading the segment, a dead segment's bloom is vacuumed
     * with it. Builds run as concurrent Spark jobs. Returns sidecars
     * built. */
-  /** Total row count of a written parquet directory from its footers —
-    * driver-side metadata only, zero Spark jobs (the footerStats
-    * discipline). Returns -1 when any footer cannot be read; callers
-    * fall back to a counting scan. */
-  private def footerRowCount(spark: SparkSession, path: String): Long = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    try {
-      val p = new Path(path)
-      val f = p.getFileSystem(conf)
-      var total = 0L
-      val entries = f.listStatus(p)
-      val parquetFiles = entries.map(_.getPath).filter { q =>
-        val n = q.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-      // A non-empty directory with NO directly-nested parquet files (e.g.
-      // a future nested layout) must report "unknown" (-1 → callers fall
-      // back to df.count()), never 0 — a bloom sized at 0 items is
-      // saturated and always-positive, a silent perf degradation.
-      if (parquetFiles.isEmpty && entries.nonEmpty) return -1L
-      parquetFiles.foreach { fp =>
-        val rd = ParquetFileReader.open(HadoopInputFile.fromPath(fp, conf))
-        try rd.getFooter.getBlocks.forEach(b => total += b.getRowCount)
-        finally rd.close()
-      }
-      total
-    } catch { case scala.util.control.NonFatal(_) => -1L }
-  }
-
   def buildBlooms(
       spark: SparkSession, root: String, c: String,
       fpp: Double = 0.01): Int = {
@@ -1939,18 +2008,13 @@ object VersionedTable {
         scala.concurrent.Future.sequence(missing.map { s =>
           scala.concurrent.Future {
             val segPath = new Path(root, s.name).toString
-            val df = spark.read.parquet(segPath)
             // expectedNumItems from the parquet FOOTERS (driver-side
-            // metadata, zero jobs) — the df.count() it replaces was a
-            // whole extra scan job per segment, doubling buildBlooms'
-            // job count. Row count (not NDV) is the same upper bound
-            // the count() path fed the sizing with; unreadable footers
-            // fall back to the counting scan.
-            val rows = footerRowCount(spark, segPath) match {
-              case -1L => df.count()
-              case n => n
-            }
-            val bf = df.stat.bloomFilter(c, math.max(rows, 1L), fpp)
+            // metadata, zero jobs) — a df.count() would be a whole extra
+            // scan job per segment. Row count (not NDV) is the upper
+            // bound the sizing needs.
+            val rows = rowCount(spark, segPath)
+            val bf = readSegments(spark, Seq(segPath), mergeSchema = false)
+              .stat.bloomFilter(c, math.max(rows, 1L), fpp)
             val tmp = new Path(root, s"_blooms/.${s.name}.$c.tmp")
             val out = f.create(tmp, true)
             try bf.writeTo(out) finally out.close()
